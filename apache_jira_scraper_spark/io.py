@@ -1,9 +1,31 @@
-"""Table loaders for the driver's synthetic parquet tables (TESTDATA.md).
+"""Session state and table loading for the engine.
 
-All loads are plain ``spark.read.parquet`` — columnar scan with Catalyst
-column pruning and predicate pushdown for free. At 100 TB the same call
-reads a partitioned/ bucketed lakehouse layout; nothing here assumes
-single-file inputs.
+The session store is the package's one container of state that outlives
+a call. Its contract:
+
+- **One dict, one key shape.** ``_STORE`` maps (applicationId, name,
+  *key) to a value. ``name`` is a string literal at the call site
+  ("dedup.shingles", "text.bm25_topk", "pipeline.issues"), and
+  tests/test_cache_inventory.py pins the full list of names.
+- **What may be stored.** Input-side silver tables (eager
+  localCheckpoints), trained model objects, and prepared-query frame
+  memos (lazy DataFrame objects; no data). Never a gate's answer
+  (RESULT_GRAIN_BANNED): reuse inputs and indexes across a session,
+  never answers.
+- **Writes.** ``session_cached`` builds an entry once per session and
+  returns it on every later call (per-entry build locks, so independent
+  builds overlap and racing first calls build once).
+  ``session_replace`` swaps in a per-call entry and frees the one it
+  replaces. Nothing else writes to the store.
+- **Lifetime.** An entry lives until its application dies (dropped on
+  the next miss, without a free) or until ``drain_session`` frees its
+  checkpoints and drops it. Both go through ``_evict``, which skips an
+  entry whose build is in flight.
+
+The table loaders read the driver's synthetic parquet tables
+(TESTDATA.md) with plain ``spark.read.parquet``: columnar scan with
+column pruning and predicate pushdown. At 100 TB the same call reads a
+partitioned lakehouse layout; nothing here assumes single-file inputs.
 """
 
 from __future__ import annotations
@@ -172,18 +194,13 @@ def narrowed_shuffle_partitions(spark: SparkSession, n: int):
             SHUFFLE_CONF_LOCK.release()
 
 
-# Re-entrant: cached builders may consult another session cache
-# (see session_cached docstring).
-_SESSION_CACHE_LOCK = threading.RLock()
-
-# Per-(cache, key) build locks (r13, VERDICT r12 item 4): the coarse
-# global lock serialized INDEPENDENT cold builds — q_two_stage_topk's
-# first sample paid ts-spine + pq + opq back-to-back (~15.5 s) even on
-# concurrent driver threads. The global lock now only guards dict
-# get/put and lock-map maintenance; each key's builder runs under its
-# own RLock, so distinct builds overlap while concurrent first calls for
-# the SAME key still build exactly once (the r09 leak contract).
+# THE session store (see the module docstring) and its per-entry build
+# locks, keyed like the store (see session_cached). The process-wide
+# RLock guards both dicts; it is re-entrant because a builder may
+# consult another entry.
+_STORE: dict = {}
 _BUILD_LOCKS: dict = {}
+_SESSION_CACHE_LOCK = threading.RLock()
 
 # Monotonic count of session_cached() calls (hits AND builds). bench.py
 # snapshots it around each gate's samples to mark gates whose benched plan
@@ -192,64 +209,111 @@ _BUILD_LOCKS: dict = {}
 SESSION_CACHE_TOUCHES = 0
 
 
-def session_cached(cache: dict, spark: SparkSession, extra_key: tuple, build):
-    """Session-scoped memoization for materialized (localCheckpoint'd)
-    DataFrames, keyed (applicationId, *extra_key) — THE cache discipline
-    for the per-session silver tables (shingle index, pair table, simhash
-    sketch, issues table, embedding projections). Entries from OTHER
-    applicationIds are evicted on insert: they reference stopped
-    SparkContexts whose checkpoint blocks are already gone, and would
-    otherwise accumulate one dead DataFrame per session restart for the
-    process lifetime.
+def _free_value(value) -> None:
+    """Free every checkpointed DataFrame a store value holds — the value
+    itself or the members of a tuple value. Model objects (weight lists,
+    numpy arrays) hold no blocks; lazy frame memos are a benign no-op in
+    free_local_checkpoint."""
+    for x in value if isinstance(value, tuple) else (value,):
+        if isinstance(x, DataFrame):
+            free_local_checkpoint(x)
 
-    Locking (r13 — per-key build locks, VERDICT r12 item 4): the
-    process-wide RLock guards only dict get/put and the lock map; each
-    (cache, key)'s builder runs under its own RLock. Concurrent first
-    calls for the SAME key still build exactly once (the r09 contract —
-    losers wait, then read the winner's entry; no overwritten-checkpoint
-    leak), while INDEPENDENT cold builds (e.g. q_two_stage_topk's
-    ts-spine/pq/opq) can overlap on concurrent driver threads instead of
-    serializing behind one global lock. Re-entrant both levels down
-    because cached builders may themselves consult another session cache
-    (the dependency graph is layered/acyclic — a cycle would deadlock,
-    and would also be an infinite build recursion under any locking)."""
+
+def _evict(key: tuple, free: bool) -> None:
+    """Drop one store entry — THE eviction rule, shared by session_cached's
+    dead-app pass and drain_session. The caller holds _SESSION_CACHE_LOCK.
+
+    review r13: never drop an entry whose build lock is HELD — a builder
+    still in flight would otherwise (a) store its result after this
+    eviction (one leaked checkpointed frame until the next pass) and (b)
+    leave same-key waiters minting a SECOND lock, re-creating the r09
+    double-build / overwritten-checkpoint leak. A skipped entry goes on a
+    later pass once its builder releases. ``free`` unpersists the entry's
+    checkpoints; dead-app entries pass False (their blocks died with
+    their SparkContext)."""
+    lk = _BUILD_LOCKS.get(key)
+    if lk is not None and not lk.acquire(blocking=False):
+        return
+    try:
+        value = _STORE.pop(key, None)
+        _BUILD_LOCKS.pop(key, None)
+    finally:
+        if lk is not None:
+            lk.release()
+    if free:
+        _free_value(value)
+
+
+def session_cached(name: str, spark: SparkSession, extra_key: tuple, build):
+    """Return this session's (name, *extra_key) entry, building it with
+    ``build()`` on the first call — THE memoization for the per-session
+    silver tables (shingle index, pair table, simhash sketch, issues
+    table, embedding projections), trained models and prepared-query
+    frame memos. Entries from OTHER applicationIds are evicted on a miss:
+    they reference stopped SparkContexts whose checkpoint blocks are
+    already gone, and would otherwise accumulate one dead DataFrame per
+    session restart for the process lifetime.
+
+    Locking (r13 — per-entry build locks, VERDICT r12 item 4): the
+    process-wide RLock guards only store get/put and the lock map; each
+    entry's builder runs under its own RLock. Concurrent first calls for
+    the SAME entry still build exactly once (the r09 contract — losers
+    wait, then read the winner's entry; no overwritten-checkpoint leak),
+    while INDEPENDENT cold builds (e.g. q_two_stage_topk's
+    ts-spine/pq/opq, ~15.5 s back-to-back under one global lock) overlap
+    on concurrent driver threads. Re-entrant both levels down because
+    builders may themselves consult another entry (the dependency graph
+    is layered/acyclic — a cycle would deadlock, and would also be an
+    infinite build recursion under any locking)."""
     global SESSION_CACHE_TOUCHES
     with _SESSION_CACHE_LOCK:
         SESSION_CACHE_TOUCHES += 1
         app = spark.sparkContext.applicationId
-        key = (app, *extra_key)
-        got = cache.get(key)
+        key = (app, name, *extra_key)
+        got = _STORE.get(key)
         if got is not None:
             return got
-        for k in [k for k in cache if k[0] != app]:
-            # review r13: never pop a build lock that is HELD — a stale
-            # app's builder still in flight would otherwise (a) store its
-            # result after this eviction pass (one leaked checkpointed
-            # frame until the next pass) and (b) leave same-key waiters
-            # minting a SECOND lock, re-creating the r09 double-build /
-            # overwritten-checkpoint leak. Skipped keys are collected on
-            # a later call once their builder releases.
-            lk = _BUILD_LOCKS.get((id(cache), k))
-            if lk is not None and not lk.acquire(blocking=False):
-                continue
-            try:
-                del cache[k]
-                _BUILD_LOCKS.pop((id(cache), k), None)
-            finally:
-                if lk is not None:
-                    lk.release()
-        lock_key = (id(cache), key)
-        build_lock = _BUILD_LOCKS.get(lock_key)
+        for k in [k for k in _STORE if k[0] != app]:
+            _evict(k, free=False)
+        build_lock = _BUILD_LOCKS.get(key)
         if build_lock is None:
-            build_lock = _BUILD_LOCKS[lock_key] = threading.RLock()
+            build_lock = _BUILD_LOCKS[key] = threading.RLock()
     with build_lock:
         with _SESSION_CACHE_LOCK:
-            got = cache.get(key)
+            got = _STORE.get(key)
         if got is None:
             got = build()
             with _SESSION_CACHE_LOCK:
-                cache[key] = got
+                _STORE[key] = got
     return got
+
+
+def session_replace(name: str, spark: SparkSession, extra_key: tuple, value) -> None:
+    """Make ``value`` this session's (name, *extra_key) entry and free the
+    checkpoints of the entry it replaces. For the checkpoints backing a
+    per-call lazy result: they stay live until the same call runs again,
+    so repeated calls pin one call's worth instead of one set per call.
+    The entry is never read back — nothing is reused across calls."""
+    with _SESSION_CACHE_LOCK:
+        key = (spark.sparkContext.applicationId, name, *extra_key)
+        old = _STORE.get(key)
+        _STORE[key] = value
+    _free_value(old)
+
+
+def drain_session() -> None:
+    """Free every checkpointed DataFrame in the store (tuple values
+    included) and drop every entry; the next call rebuilds. Entries of a
+    dead application are dropped without a free. Draining everything at
+    once keeps each prepared-query memo in step with the checkpoints its
+    lazy plan scans (ADVICE r13)."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    app = sc.applicationId if sc is not None else None
+    with _SESSION_CACHE_LOCK:
+        for k in list(_STORE):
+            _evict(k, free=k[0] == app)
 
 
 def normalize_events_ts(df: DataFrame, spark: SparkSession, context: str) -> DataFrame:

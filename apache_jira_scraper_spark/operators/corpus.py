@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io import load_table, session_cached
+
 SPLIT_PPM = 1_000_000
 
 
@@ -339,9 +341,6 @@ def corpus_report_sql() -> str:
     return _CORPUS_REPORT_SQL_TPL.format(stop=_STOP_SQL) + _CORPUS_REPORT_ORDER
 
 
-_DOMAIN_CARDS_CACHE: dict = {}
-
-
 def domain_cards(docs: DataFrame, emb: DataFrame) -> DataFrame:
     """Embedding-domain composition section of the data card (r13):
     k-means DOMAIN DISCOVERY over the embedding column — every vector is
@@ -389,7 +388,6 @@ def domain_cards(docs: DataFrame, emb: DataFrame) -> DataFrame:
 def _domain_cards_cached(spark, sf_dir: str) -> DataFrame:
     """Session-cached domain section (16 rows): the exact quantizer's
     bounded collect + numpy rounds re-ran per gate call otherwise."""
-    from ..io import load_table, session_cached
     from .similarity import _emb
 
     def _build() -> DataFrame:
@@ -397,7 +395,7 @@ def _domain_cards_cached(spark, sf_dir: str) -> DataFrame:
             load_table(spark, sf_dir, "documents"), _emb(spark, sf_dir)
         ).localCheckpoint(eager=True)
 
-    return session_cached(_DOMAIN_CARDS_CACHE, spark, (sf_dir,), _build)
+    return session_cached("corpus.domain_cards", spark, (sf_dir,), _build)
 
 
 def _domain_cards_sql() -> str:
@@ -430,23 +428,19 @@ def corpus_report_gate_sql() -> str:
     )
 
 
-_REPORT_BASE_CACHE: dict = {}
-
-
 def _report_base_cached(spark, sf_dir: str) -> DataFrame:
     """Session-materialized `_report_base` projection (r13 optimization
     round, guide §5): the per-doc (source, lang, band, n_tokens) silver
     column set is a pure function of the corpus — landed once per session
     like text's tokenized-docs checkpoint; the grouping-sets aggregation
     stays live per call."""
-    from ..io import load_table, session_cached
 
     def _build() -> DataFrame:
         return _report_base(
             load_table(spark, sf_dir, "documents")
         ).localCheckpoint(eager=True)
 
-    return session_cached(_REPORT_BASE_CACHE, spark, (sf_dir,), _build)
+    return session_cached("corpus.report_base", spark, (sf_dir,), _build)
 
 
 def q_corpus_report(spark, sf_dir: str) -> DataFrame:
@@ -769,7 +763,6 @@ def cross_split_contamination(spark, sf_dir: str, ordered: bool = True) -> DataF
     assignment: two broadcast-ready joins of a tiny pair set against a
     narrow projection — nothing here rescans the corpus.
     """
-    from ..io import load_table
     from .dedup import minhash_pairs
 
     pairs = minhash_pairs(spark, sf_dir)
@@ -926,15 +919,11 @@ GATE_MIX_WEIGHTS = {"src0": 500_000, "src1": 300_000, "src2": 200_000}
 GATE_MIX_BUDGET = 20_000
 
 
-_DOCS_PROJ_CACHE: dict = {}
-
-
 def _docs_projection(spark, sf_dir: str) -> DataFrame:
     """Session-materialized (doc_id, source, n_chars, text) corpus
     projection — the assembly gate's shared silver leaf (the
     _emb_projection pattern; one scan per session, not one per leg per
     bench sample)."""
-    from ..io import load_table, session_cached
 
     def _build() -> DataFrame:
         return (
@@ -943,7 +932,7 @@ def _docs_projection(spark, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    return session_cached(_DOCS_PROJ_CACHE, spark, (sf_dir,), _build)
+    return session_cached("corpus.docs_proj", spark, (sf_dir,), _build)
 
 
 def q_corpus_assembly(spark, sf_dir: str) -> DataFrame:
@@ -1174,7 +1163,6 @@ def build_training_corpus(
     from .dedup import dedup_cluster_labels
     from .text import q_quality_score
 
-    from ..io import load_table
 
     docs = load_table(spark, sf_dir, "documents")
 

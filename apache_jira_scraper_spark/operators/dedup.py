@@ -27,7 +27,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import free_local_checkpoint, load_table, load_table_parallel
+from ..io import (
+    free_local_checkpoint,
+    load_table,
+    load_table_parallel,
+    session_cached,
+    session_replace,
+)
 from .graph import (
     PAGERANK_FINAL_CTE,
     PAGERANK_W_FINAL_CTE,
@@ -233,26 +239,18 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 MINHASH_SIG_SQL = f"SELECT * FROM ({_SIG_SQL}) s ORDER BY doc_id"
 
 
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hashed shingle inverted index (doc_id, sh), materialized once per
     (session, sf_dir) and shared by every consumer — minhash signatures,
     LSH verification, and the exact n-gram jaccard join all read the same
     blocks. The production analog is landing the shingle table once between
     pipeline stages rather than re-tokenizing the corpus per operator."""
-    from ..io import session_cached
-
     return session_cached(
-        _SHINGLE_CACHE,
+        "dedup.shingles",
         spark,
         (sf_dir,),
         lambda: _doc_shingle_hashed(spark, sf_dir).localCheckpoint(eager=True),
     )
-
-
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -267,7 +265,6 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified with exact jaccard via the shared-shingle inverted index and
     filtered at 0.5.
     """
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         jac, scratch = _minhash_pairs_uncached(spark, sf_dir)
@@ -279,7 +276,7 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             df.unpersist()
         return cached
 
-    return session_cached(_PAIRS_CACHE, spark, (sf_dir,), _build)
+    return session_cached("dedup.pairs", spark, (sf_dir,), _build)
 
 
 def _minhash_pairs_uncached(
@@ -670,9 +667,6 @@ def q_dedup_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh.unionByName(ng).unionByName(sub).orderBy("leg", "a", "b")
 
 
-_NGRAM_LEG_CACHE: dict = {}
-
-
 def _ngram_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached ngram leg of the near-dup gate (r13 optimization
     round): the exact-jaccard inverted-index self-join over the shared
@@ -682,15 +676,11 @@ def _ngram_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     substr leg already ride this exact discipline. Production analog: the
     exact pair table is landed once between dedup stages. The checkpoint
     is pair-count-sized (550 rows at sf0.1)."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         return q_dedup_ngram_jaccard(spark, sf_dir).localCheckpoint(eager=True)
 
-    return session_cached(_NGRAM_LEG_CACHE, spark, (sf_dir,), _build)
-
-
-_SUBSTR_LEG_CACHE: dict = {}
+    return session_cached("dedup.ngram_leg", spark, (sf_dir,), _build)
 
 
 def _substr_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -699,14 +689,13 @@ def _substr_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     reassembles cleaned text — per-call recompute of a per-session-constant
     result, the same pattern the bigram/contam/semantic legs fixed. The
     checkpoint is docs-sized (one row per doc)."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         return exact_substring_dedup(
             load_table_parallel(spark, sf_dir, "documents"), ordered=False
         ).localCheckpoint(eager=True)
 
-    return session_cached(_SUBSTR_LEG_CACHE, spark, (sf_dir,), _build)
+    return session_cached("dedup.substr_leg", spark, (sf_dir,), _build)
 
 
 _BANDS_SQL = f"""
@@ -925,9 +914,6 @@ def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 SIMHASH_SIG_SQL = f"SELECT * FROM ({_SIMHASH_SQL}) s ORDER BY doc_id"
 
 
-_SIMHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _simhash_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-materialized (doc_id, simhash) sketch table — the shingle_
     index pattern: the pair join's two sides read one checkpointed leaf. A
@@ -935,10 +921,8 @@ def _simhash_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a strong reference — never GC'd, executor storage leaked for the rest
     of the session); the localCheckpoint blocks are ContextCleaner-managed
     and the cache is keyed per (session, sf_dir) like its siblings."""
-    from ..io import session_cached
-
     return session_cached(
-        _SIMHASH_CACHE,
+        "dedup.simhash",
         spark,
         (sf_dir,),
         lambda: _simhash_df(spark, sf_dir).localCheckpoint(eager=True),
@@ -1151,25 +1135,18 @@ def _pairs_from_projection(emb: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-_EMB_PROJ_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def _emb_projection(spark: SparkSession, sf_dir: str, n_bits: int) -> DataFrame:
     """Session-materialized normed/bucketed embedding projection (the
     shingle_index pattern): the self-join's two sides read one checkpointed
     leaf instead of each re-running the cast + norm + n_bits hyperplane
     dots — and Catalyst analyzes the big HOF expression tree once, not
     once per join side (the r03 wall-time jump was plan-side, not data)."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         emb = load_table_parallel(spark, sf_dir, "embeddings")
         return _normed_bucketed(emb, n_bits).localCheckpoint(eager=True)
 
-    return session_cached(_EMB_PROJ_CACHE, spark, (sf_dir, n_bits), _build)
-
-
-_EMB_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return session_cached("dedup.emb_proj", spark, (sf_dir, n_bits), _build)
 
 
 def _emb_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1177,14 +1154,13 @@ def _emb_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash_pairs discipline for the embedding family: the pair gate AND
     semantic_dedup's components both consume this one landed table instead
     of each re-running the (label, bucket) self-join + cosine verify."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         return _pairs_from_projection(
             _emb_projection(spark, sf_dir, EMB_N_BITS), COSINE_DUP_THRESHOLD
         ).localCheckpoint(eager=True)
 
-    return session_cached(_EMB_PAIRS_CACHE, spark, (sf_dir,), _build)
+    return session_cached("dedup.emb_pairs", spark, (sf_dir,), _build)
 
 
 def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1320,9 +1296,6 @@ def connected_components(
     return labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
 
 
-_LABELS_CACHE: dict = {}
-
-
 def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) near-dup component labels only — the entry
     point for consumers that need the membership and nothing else
@@ -1336,7 +1309,6 @@ def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-run the multi-round hash-to-min loop AND pin a fresh converged-
     labels checkpoint per call (connected_components returns it lazily,
     so the caller can never free it — review r10)."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         edges = minhash_pairs(spark, sf_dir).select("d1", "d2")
@@ -1348,7 +1320,7 @@ def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             free_local_checkpoint(df)  # by the cached projection above
         return labels
 
-    return session_cached(_LABELS_CACHE, spark, (sf_dir,), _build)
+    return session_cached("dedup.labels", spark, (sf_dir,), _build)
 
 
 def _cluster_core(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1361,10 +1333,13 @@ def _cluster_core(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The three consumers still run on concurrent driver threads over ONE
     eager edge checkpoint (own_edges=False) — the gate pays the slowest
-    loop, not the sum (measured 3.56 -> ~2.3 s at sf0.1, r11). The
-    consumers' final converged checkpoints back the returned frame, so
-    they cannot be freed here (lazy result); each loop's superseded
-    per-round checkpoints are freed inside the loops themselves.
+    loop, not the sum (measured 3.56 -> ~2.3 s at sf0.1, r11). Each
+    loop's superseded per-round checkpoints are freed inside the loop.
+    The three converged checkpoints back the returned lazy frame:
+    io.session_replace holds them until the next call for the same
+    sf_dir frees them (ADVICE r14 #1), bounding repeated calls to one
+    call's worth. A returned frame is consumable until the gate runs
+    again; the held checkpoints are never read back (no result reuse).
     """
     # jaccard ppm rides the edge checkpoint as the weight column:
     # round(jaccard*1e6) is exact in both engines because the 6-decimal
@@ -1379,25 +1354,31 @@ def _cluster_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
+    converged: list = []
     try:
         from concurrent.futures import ThreadPoolExecutor
 
+        pair = edges.select("d1", "d2")
+        kw = {"own_edges": False, "scratch_out": converged}
         with ThreadPoolExecutor(max_workers=3) as ex:
-            f_lbl = ex.submit(
-                connected_components, edges.select("d1", "d2"), own_edges=False
-            )
-            f_rk = ex.submit(pagerank, edges.select("d1", "d2"), own_edges=False)
-            f_rw = ex.submit(pagerank_weighted, edges, own_edges=False)
+            f_lbl = ex.submit(connected_components, pair, **kw)
+            f_rk = ex.submit(pagerank, pair, **kw)
+            f_rw = ex.submit(pagerank_weighted, edges, **kw)
             labels = f_lbl.result()
             ranks = f_rk.result()
             ranks_w = f_rw.result().withColumnRenamed(
                 "pagerank_ppb", "pagerank_w_ppb"
             )
-        return labels.join(ranks, "doc_id").join(ranks_w, "doc_id")
+    except BaseException:
+        for df in converged:
+            free_local_checkpoint(df)
+        raise
     finally:
         # All consumers are fully materialized (their results are eager
         # checkpoints), so the shared edge blocks are dead either way.
         free_local_checkpoint(edges)
+    session_replace("dedup.cluster_loops", spark, (sf_dir,), tuple(converged))
+    return labels.join(ranks, "doc_id").join(ranks_w, "doc_id")
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1502,11 +1483,6 @@ ORDER BY cluster_id, doc_id
 """
 
 
-_SEM_IVF_CACHE: dict = {}
-_SEM_LSH_CACHE: dict = {}
-_SEM_PROTO_CACHE: dict = {}
-
-
 def _sem_lsh_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached LSH leg of the semantic-dedup gate (r12): the leg
     re-ran connected components over the cached pair table on EVERY gate
@@ -1514,7 +1490,6 @@ def _sem_lsh_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     call for a result that is a pure function of (session, sf_dir). Same
     discipline as the ivf leg below; the converged-labels scratch frees
     after the checkpoint."""
-    from ..io import session_cached
     from .ivf import semantic_dedup
 
     def _build() -> DataFrame:
@@ -1529,7 +1504,7 @@ def _sem_lsh_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             free_local_checkpoint(df)
         return out
 
-    return session_cached(_SEM_LSH_CACHE, spark, (sf_dir,), _build)
+    return session_cached("dedup.sem_lsh", spark, (sf_dir,), _build)
 
 
 def _sem_ivf_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1537,8 +1512,7 @@ def _sem_ivf_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     training (ivf_build_exact — one bounded collect + driver numpy) +
     nprobe-2 blocked pair generation + components, checkpointed once per
     (session, sf_dir); the converged-labels scratch frees after the
-    checkpoint (the _LABELS_CACHE pattern)."""
-    from ..io import session_cached
+    checkpoint (the dedup_cluster_labels pattern)."""
     from .ivf import ivf_build_exact, ivf_near_dup_pairs_exact, semantic_dedup
     from .similarity import _emb
 
@@ -1555,19 +1529,17 @@ def _sem_ivf_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             free_local_checkpoint(df)
         return out
 
-    return session_cached(_SEM_IVF_CACHE, spark, (sf_dir,), _build)
+    return session_cached("dedup.sem_ivf", spark, (sf_dir,), _build)
 
 
 def _sem_proto_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached D4 prototype-prune leg: exact-discipline training
     (bounded collect + driver numpy) + ivf.density_prune's histogram-
     cutoff keep labels, checkpointed once per (session, sf_dir)."""
-    from ..io import session_cached
     from .ivf import density_prune, ivf_build_exact
     from .similarity import _emb
 
     def _build() -> DataFrame:
-        from ..io import free_local_checkpoint
 
         emb = _emb(spark, sf_dir)
         cents = ivf_build_exact(emb)
@@ -1579,7 +1551,7 @@ def _sem_proto_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             free_local_checkpoint(df)
         return out
 
-    return session_cached(_SEM_PROTO_CACHE, spark, (sf_dir,), _build)
+    return session_cached("dedup.sem_proto", spark, (sf_dir,), _build)
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

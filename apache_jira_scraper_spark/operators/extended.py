@@ -30,7 +30,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, session_cached
 from ..schemas import RAW_ISSUE
 from ..streaming import pipelines
 from .extract import extract_issues
@@ -169,17 +169,14 @@ ORDER BY l_returnflag
 CMS_EPS = 0.0001
 CMS_CONF = 0.99
 CMS_SEED = 42
-_CMS_HH_CACHE: dict = {}
 
 
 def _cms_hh_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached heavy-hitter verdict (3 rows): the leg's two
     lineitem passes + two driver collects are per-session-constant
     (measured ~1.4 s/warm-call at sf0.1 uncached)."""
-    from ..io import session_cached
-
     return session_cached(
-        _CMS_HH_CACHE,
+        "extended.cms_hh",
         spark,
         (sf_dir,),
         lambda: q_cms_heavy_hitter(spark, sf_dir).localCheckpoint(eager=True),
@@ -431,8 +428,6 @@ FROM e
 GROUP BY ws, event_type
 ORDER BY window_start, event_type
 """
-
-
 
 
 def _land_two_batches(landing: str, first: DataFrame, second: DataFrame) -> str:
@@ -865,9 +860,6 @@ ORDER BY issue_key
 """
 
 
-_REST_FRAME_MEMO: dict = {}
-
-
 def q_jira_rest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paginated REST scan through the custom DataSource against an
     in-process mock Jira (deterministic corpus), then the silver extraction.
@@ -887,12 +879,11 @@ def q_jira_rest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.0-1.4 s warm, same session). NO data is materialized: every
     execution re-runs the page fetches (DataSource read() per task) and
     the full extraction; the presentation sort stays live per call."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         return _rest_ingest_frame(spark)
 
-    frame = session_cached(_REST_FRAME_MEMO, spark, (sf_dir,), _build)
+    frame = session_cached("extended.rest_frame", spark, (sf_dir,), _build)
     return frame.orderBy("issue_key")
 
 

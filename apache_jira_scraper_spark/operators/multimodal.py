@@ -3544,15 +3544,6 @@ def _phash_pair_fold(
 #: multi-shape grids (5 docs / 1306 patches at sf0.01).
 PATCH_SAMPLE_MOD = 100
 
-#: Session caches for the multimodal gate (keyed (applicationId, sf_dir)
-#: by io.session_cached): the eager clusters leg and the three
-#: per-modality hash tables (r09 — the Arrow decode stages are the
-#: gate's dominant per-call cost and the tables are pure functions of
-#: the input corpus).
-_MEDIA_CLUSTERS: dict = {}
-_PHASH_TABLES: dict = {}
-_PHASH_PAIRS: dict = {}
-
 
 def phash_tables_cached(spark: SparkSession, sf_dir: str):
     """The three per-modality hash tables (img, vid, aud), hashed once per
@@ -3599,7 +3590,9 @@ def phash_tables_cached(spark: SparkSession, sf_dir: str):
             raise
         return tuple(built)
 
-    return session_cached(_PHASH_TABLES, spark, (sf_dir,), _build_phash_tables)
+    return session_cached(
+        "multimodal.phash_tables", spark, (sf_dir,), _build_phash_tables
+    )
 
 
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3732,7 +3725,10 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-doc LEFT joins of unique-keyed folds equal one left join of
     # their full-outer merge, so the gate output is row-identical.
     core = session_cached(
-        _FIXTURE_CORE, spark, (sf_dir,), lambda: _build_fixture_core(spark, sf_dir)
+        "multimodal.fixture_core",
+        spark,
+        (sf_dir,),
+        lambda: _build_fixture_core(spark, sf_dir),
     )
     return (
         spine.join(per_doc, "doc_id", "left")
@@ -3782,13 +3778,10 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FIXTURE_CORE: dict = {}
-
-
 def _build_fixture_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multimodal gate's 11 fixture-derived per-doc folds merged on
-    doc_id into one eager session checkpoint (io.session_cached via
-    _FIXTURE_CORE). Each fold is unique on doc_id, so the full-outer
+    doc_id into one eager session checkpoint (io.session_cached
+    "multimodal.fixture_core"). Each fold is unique on doc_id, so the full-outer
     merge joined LEFT onto the spine is row- and null-identical to the
     previous 11 chained left joins; missing-fold columns stay NULL and
     the gate's COALESCE defaults apply unchanged. Size is bounded by the
@@ -3828,7 +3821,7 @@ def _build_fixture_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         return tuple(built)
 
     img_pairs, vid_pairs, aud_pairs = session_cached(
-        _PHASH_PAIRS, spark, (sf_dir,), _build_pair_tables
+        "multimodal.phash_pairs", spark, (sf_dir,), _build_pair_tables
     )
     img_fold = img_ph.select("doc_id", F.col("phash").alias("img_phash"))
     img_pair_fold = _phash_pair_fold(
@@ -3920,7 +3913,9 @@ def _build_fixture_core(spark: SparkSession, sf_dir: str) -> DataFrame:
                 free_local_checkpoint(df)
         return clus
 
-    clus = session_cached(_MEDIA_CLUSTERS, spark, (sf_dir,), _build_clusters)
+    clus = session_cached(
+        "multimodal.media_clusters", spark, (sf_dir,), _build_clusters
+    )
     m_parity = F.expr(
         f"(doc_id % {PHASH_GROUP}) DIV {PHASH_SAMPLE_MOD} % 2"
     )

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, session_cached
 from .extract import extract_issues
 from .tasks import comment_digests, issues_to_examples
 
@@ -174,9 +174,6 @@ def synthetic_raw_issues(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ISSUES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _issues(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesized+extracted issues, persisted once per (session, sf_dir).
 
@@ -186,7 +183,6 @@ def _issues(spark: SparkSession, sf_dir: str) -> DataFrame:
     what a production pipeline would persist between its silver and gold
     stages.
     """
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         df = extract_issues(synthetic_raw_issues(spark, sf_dir))
@@ -206,10 +202,7 @@ def _issues(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialization without the FS trip.
         return df.localCheckpoint(eager=True)
 
-    return session_cached(_ISSUES_CACHE, spark, (sf_dir,), _build)
-
-
-_EXAMPLES_FRAME_MEMO: dict = {}
+    return session_cached("pipeline.issues", spark, (sf_dir,), _build)
 
 
 def _examples(
@@ -234,10 +227,8 @@ def _examples(
     driver-side plan work per gate per call. NO data is materialized —
     every consumer's action re-runs the explode from the issues
     checkpoint (the noop sink / aggregates execute the full plan)."""
-    from ..io import session_cached
-
     return session_cached(
-        _EXAMPLES_FRAME_MEMO,
+        "pipeline.examples_frame",
         spark,
         (sf_dir, include_content),
         lambda: issues_to_examples(

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..io import session_cached
+
 Q_LEVELS = 127  # symmetric int8: values in [-127, 127]
 
 
@@ -932,16 +934,11 @@ OPQ_MIN_HITS = 1
 PQ_HITS_TOTAL_MIN = 37
 OPQ_HITS_TOTAL_MIN = 40
 
-_PQ_MODEL: dict = {}
-_OPQ_MODEL: dict = {}
-_TS_SPINE: dict = {}
-
 
 def _pq_model_cached(spark, sf_dir: str):
     """Session-cached (codebooks, encoded-corpus checkpoint) — both pure
     functions of (session, sf_dir), the silver-table discipline: train and
     encode once per session, every later gate call scans stored blocks."""
-    from ..io import session_cached
     from .similarity import _emb
 
     def _build():
@@ -950,14 +947,13 @@ def _pq_model_cached(spark, sf_dir: str):
         codes = pq_encode(emb, books).localCheckpoint(eager=True)
         return (books, codes)
 
-    return session_cached(_PQ_MODEL, spark, (sf_dir,), _build)
+    return session_cached("quantize.pq_model", spark, (sf_dir,), _build)
 
 
 def _opq_model_cached(spark, sf_dir: str):
     """Session-cached (rotation, codebooks, rotated-corpus codes) — the
     OPQ counterpart of _pq_model_cached; the O(dim²) corpus rotation runs
     once per session inside the cached encode."""
-    from ..io import session_cached
     from .similarity import _emb
 
     def _build():
@@ -966,7 +962,7 @@ def _opq_model_cached(spark, sf_dir: str):
         codes = opq_encode(emb, r, books).localCheckpoint(eager=True)
         return (r, books, codes)
 
-    return session_cached(_OPQ_MODEL, spark, (sf_dir,), _build)
+    return session_cached("quantize.opq_model", spark, (sf_dir,), _build)
 
 
 def q_two_stage_topk(spark, sf_dir: str) -> DataFrame:
@@ -989,7 +985,6 @@ def q_two_stage_topk(spark, sf_dir: str) -> DataFrame:
     OPQ_HITS_TOTAL_MIN). The per-query min floor tolerates a near-random
     shortlist when the floor is 1; the total is satisfied only by real
     aggregate recall (>= 37/50 and 40/50 respectively)."""
-    from ..io import session_cached
     from .similarity import N_QUERIES, TOP_K, _emb
 
     emb = _emb(spark, sf_dir)
@@ -1009,7 +1004,7 @@ def q_two_stage_topk(spark, sf_dir: str) -> DataFrame:
 
     def _ts_build():
         return session_cached(
-            _TS_SPINE,
+            "quantize.ts_spine",
             spark,
             (sf_dir,),
             lambda: two_stage_topk(

@@ -22,7 +22,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import clean_text
-from ..io import load_table, load_table_parallel
+from ..io import (
+    free_local_checkpoint,
+    load_table,
+    load_table_parallel,
+    session_cached,
+)
 
 STOPWORDS = ("the", "and", "of", "to", "a", "in", "is", "for")
 
@@ -2088,16 +2093,6 @@ ORDER BY qid, rank
 """
 
 
-#: session cache for the gate's BM25 top-k table (50 rows, pure function
-#: of (session, sf_dir) — the similarity family's q_cosine_topk
-#: precedent): it feeds BOTH gate legs, and caching also bounds the
-#: inverted-index checkpoint inside bm25_topk to one per session.
-_BM25_TOPK_CACHE: dict = {}
-_BIGRAM_LEG_CACHE: dict = {}
-_DOCS_TOK_CACHE: dict = {}
-_CONTAM_LEG_CACHE: dict = {}
-
-
 def _docs_tokenized_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared tokenized-documents checkpoint (VERDICT r11 item 1): every
     text_quality_signals leg previously re-scanned the parquet and
@@ -2109,7 +2104,6 @@ def _docs_tokenized_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     it from cached blocks instead of the parquet scan. At cluster scale
     the same pattern is a persisted silver table: tokenize once, run the
     whole quality battery over the one materialization."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         return (
@@ -2118,7 +2112,7 @@ def _docs_tokenized_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    return session_cached(_DOCS_TOK_CACHE, spark, (sf_dir,), _build)
+    return session_cached("text.docs_tok", spark, (sf_dir,), _build)
 
 
 def _bpe_pieces_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2131,7 +2125,6 @@ def _bpe_pieces_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace-token checkpoint; at cluster scale this is the landed
     pretokenized silver table the tokenizer-induction stages fan out
     from."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         return (
@@ -2145,7 +2138,7 @@ def _bpe_pieces_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    return session_cached(_BPE_PIECES_CACHE, spark, (sf_dir,), _build)
+    return session_cached("text.bpe_pieces", spark, (sf_dir,), _build)
 
 
 def _unigram_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2155,14 +2148,13 @@ def _unigram_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     backoff legs (r10/r12) — yet the token-count shuffle join re-ran on
     every warm gate call (~0.6 s at sf0.1 by the leg split). The
     checkpoint is docs-sized (one row per doc)."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         return unigram_logprob(
             _docs_tokenized_cached(spark, sf_dir)
         ).localCheckpoint(eager=True)
 
-    return session_cached(_UNIGRAM_LEG_CACHE, spark, (sf_dir,), _build)
+    return session_cached("text.unigram_leg", spark, (sf_dir,), _build)
 
 
 def _contam_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2172,7 +2164,6 @@ def _contam_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     3x) — exactly the per-call recompute the bigram leg's cache fixed in
     r10. The result is train-docs-sized (one row per train doc), so the
     checkpoint is small; the build consumes the shared tokenized frame."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         docs = _docs_tokenized_cached(spark, sf_dir)
@@ -2181,19 +2172,7 @@ def _contam_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.filter(F.col("doc_id") % DECONTAM_EVAL_MOD == 0),
         ).localCheckpoint(eager=True)
 
-    return session_cached(_CONTAM_LEG_CACHE, spark, (sf_dir,), _build)
-
-
-_BACKOFF_LEG_CACHE: dict = {}
-_BPE_PIECES_CACHE: dict = {}
-_UNIGRAM_LEG_CACHE: dict = {}
-_QC_WEIGHTS_CACHE: dict = {}
-_BPE_LEG_CACHE: dict = {}
-_DSIR_LEG_CACHE: dict = {}
-_TOKPACK_LEG_CACHE: dict = {}
-_PPL_LEG_CACHE: dict = {}
-_VERDICT_LEG_CACHE: dict = {}
-_UNITOK_LEG_CACHE: dict = {}
+    return session_cached("text.contam_leg", spark, (sf_dir,), _build)
 
 
 def _unitok_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2206,7 +2185,6 @@ def _unitok_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash — and ('ut_seg', doc_id, md5 of the pieces, n_pieces,
     score). Oracle: unigram.unigram_gate_sql's rolling-window recursive-
     CTE Viterbi (``ug_`` prefix reserved)."""
-    from ..io import session_cached
     from .unigram import (
         UNI_GATE_MAXP,
         UNI_GATE_ROUNDS,
@@ -2249,7 +2227,7 @@ def _unitok_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return vocab_rows.unionByName(seg_rows).localCheckpoint(eager=True)
 
-    return session_cached(_UNITOK_LEG_CACHE, spark, (sf_dir,), _build)
+    return session_cached("text.unitok_leg", spark, (sf_dir,), _build)
 
 
 def _verdict_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2257,7 +2235,6 @@ def _verdict_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal frames plus two narrow maps; caching the docs-sized result
     follows the sibling discipline (measured ~0.3 s/warm-call otherwise
     — the four-join subtree re-plans every gate call)."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         from .classifier import qc_report
@@ -2271,7 +2248,7 @@ def _verdict_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             qc_report(docs, _qc_weights_cached(spark, sf_dir), ordered=False),
         ).localCheckpoint(eager=True)
 
-    return session_cached(_VERDICT_LEG_CACHE, spark, (sf_dir,), _build)
+    return session_cached("text.verdict_leg", spark, (sf_dir,), _build)
 
 
 def _ppl_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2281,14 +2258,13 @@ def _ppl_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1 (measured; the standalone leg runs 0.3 s warm) — so the
     corpus-sized label frame checkpoints once per (session, sf_dir) like
     its siblings."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         return ppl_bucket(
             _backoff_leg_cached(spark, sf_dir)
         ).localCheckpoint(eager=True)
 
-    return session_cached(_PPL_LEG_CACHE, spark, (sf_dir,), _build)
+    return session_cached("text.ppl_leg", spark, (sf_dir,), _build)
 
 
 def _tokpack_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2298,14 +2274,13 @@ def _tokpack_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     pack_token_ids — the artifact a pretraining pipeline actually lands.
     Sequence-count-sized result (total_tokens / PACK_CONTEXT rows), so
     the checkpoint is small."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         docs = _docs_tokenized_cached(spark, sf_dir)
         enc = encode_with_vocab(docs, build_vocab(docs), ordered=False)
         return pack_token_ids(enc).localCheckpoint(eager=True)
 
-    return session_cached(_TOKPACK_LEG_CACHE, spark, (sf_dir,), _build)
+    return session_cached("text.tokpack_leg", spark, (sf_dir,), _build)
 
 
 def _dsir_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2313,7 +2288,6 @@ def _dsir_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode + two bucket-keyed aggs + bucket join + doc re-agg per build
     — per-session-constant, so it rides the bigram/contam discipline
     over the shared tokenized checkpoint."""
-    from ..io import session_cached
     from .dsir import dsir_logratio
 
     def _build() -> DataFrame:
@@ -2321,7 +2295,7 @@ def _dsir_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             _docs_tokenized_cached(spark, sf_dir), ordered=False
         ).localCheckpoint(eager=True)
 
-    return session_cached(_DSIR_LEG_CACHE, spark, (sf_dir,), _build)
+    return session_cached("text.dsir_leg", spark, (sf_dir,), _build)
 
 
 def _bpe_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2335,7 +2309,6 @@ def _bpe_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the learned rule sequence and ('bpe_seg', doc_id, md5 of the
     pieces) for the segmentation. The trained word table's checkpoint is
     freed once the leg materializes."""
-    from ..io import free_local_checkpoint, session_cached
     from .bpe import (
         BPE_GATE_MERGES,
         bpe_encode,
@@ -2408,7 +2381,7 @@ def _bpe_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         free_local_checkpoint(seg)
         return out
 
-    return session_cached(_BPE_LEG_CACHE, spark, (sf_dir,), _build)
+    return session_cached("text.bpe_leg", spark, (sf_dir,), _build)
 
 
 def _qc_weights_cached(spark: SparkSession, sf_dir: str) -> list:
@@ -2419,11 +2392,10 @@ def _qc_weights_cached(spark: SparkSession, sf_dir: str) -> list:
     weight list (qc_gate_weights — the cross-engine contract), not a
     DataFrame: session_cached stores it fine, there is just no
     checkpoint to free on eviction."""
-    from ..io import session_cached
     from .classifier import qc_gate_weights
 
     return session_cached(
-        _QC_WEIGHTS_CACHE,
+        "text.qc_weights",
         spark,
         (sf_dir,),
         lambda: qc_gate_weights(_docs_tokenized_cached(spark, sf_dir)),
@@ -2435,14 +2407,13 @@ def _backoff_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-partitioned joins over the exploded trigram stream per build —
     per-session-constant, so it rides the bigram/contam discipline and
     consumes the shared tokenized checkpoint."""
-    from ..io import session_cached
 
     def _build() -> DataFrame:
         return trigram_backoff_logprob(
             _docs_tokenized_cached(spark, sf_dir)
         ).localCheckpoint(eager=True)
 
-    return session_cached(_BACKOFF_LEG_CACHE, spark, (sf_dir,), _build)
+    return session_cached("text.backoff_leg", spark, (sf_dir,), _build)
 
 
 def _bigram_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2452,7 +2423,6 @@ def _bigram_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch frees deterministically after materialization — without this,
     every gate call (bench samples 3x) leaked either a recompute of the
     widest per-doc explode or an unfreeable per-call checkpoint."""
-    from ..io import free_local_checkpoint, session_cached
 
     def _build() -> DataFrame:
         scratch: list = []
@@ -2463,7 +2433,7 @@ def _bigram_leg_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             df.unpersist()
         return out
 
-    return session_cached(_BIGRAM_LEG_CACHE, spark, (sf_dir,), _build)
+    return session_cached("text.bigram_leg", spark, (sf_dir,), _build)
 
 
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2483,7 +2453,6 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialize; the DuckDB oracle restates the fusion over the same
     two branch queries (validated against an independent Python RRF
     before wiring)."""
-    from ..io import free_local_checkpoint, session_cached
     from .similarity import hybrid_rrf_topk, q_cosine_topk
 
     def _build() -> DataFrame:
@@ -2500,7 +2469,11 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             free_local_checkpoint(df)
         return out
 
-    bm = session_cached(_BM25_TOPK_CACHE, spark, (sf_dir,), _build)
+    # the gate's BM25 top-k table (50 rows, pure function of (session,
+    # sf_dir) — the similarity family's q_cosine_topk precedent): it feeds
+    # BOTH gate legs, and caching also bounds the inverted-index
+    # checkpoint inside bm25_topk to one per session.
+    bm = session_cached("text.bm25_topk", spark, (sf_dir,), _build)
     fused = hybrid_rrf_topk(bm, q_cosine_topk(spark, sf_dir))
     return (
         bm.select(
@@ -2559,45 +2532,6 @@ ORDER BY leg, qid, rank
 """
 
 
-_TEXT_GATE_FRAME_MEMO: dict = {}
-
-
-def drain_session_caches() -> None:
-    """Free + clear EVERY session cache this module owns, including the
-    gate's prepared-query frame memo (ADVICE r13: the memo holds a lazy
-    frame referencing the leg checkpoints — any drain site that clears a
-    leg cache but leaves the memo hands the next caller dangling
-    checkpoint scans; centralizing the enumeration HERE makes that
-    invariant structural instead of a convention each drain site must
-    remember). Callers: tools/scale_probe.py's cold-sample reset, tests.
-    Values are checkpointed DataFrames, tuples containing them, or plain
-    model objects (cleared; nothing to free)."""
-    from ..io import free_local_checkpoint
-
-    for cache in (
-        _BM25_TOPK_CACHE,
-        _BIGRAM_LEG_CACHE,
-        _DOCS_TOK_CACHE,
-        _CONTAM_LEG_CACHE,
-        _BACKOFF_LEG_CACHE,
-        _QC_WEIGHTS_CACHE,
-        _BPE_LEG_CACHE,
-        _DSIR_LEG_CACHE,
-        _TOKPACK_LEG_CACHE,
-        _PPL_LEG_CACHE,
-        _VERDICT_LEG_CACHE,
-        _UNIGRAM_LEG_CACHE,
-        _UNITOK_LEG_CACHE,
-        _BPE_PIECES_CACHE,
-        _TEXT_GATE_FRAME_MEMO,
-    ):
-        for v in list(cache.values()):
-            for x in v if isinstance(v, tuple) else (v,):
-                if hasattr(x, "unpersist"):
-                    free_local_checkpoint(x)
-        cache.clear()
-
-
 def q_text_quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union-tagged driver gate — thin prepared-query wrapper (r13
     optimization round, guide §7.3: planning time itself can become the
@@ -2610,10 +2544,8 @@ def q_text_quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimization, physical planning and execution still run on every
     call (the noop sink re-executes the full plan). The presentation
     sort stays live per call on top."""
-    from ..io import session_cached
-
     frame = session_cached(
-        _TEXT_GATE_FRAME_MEMO,
+        "text.gate_frame",
         spark,
         (sf_dir,),
         lambda: _build_text_gate_frame(spark, sf_dir),

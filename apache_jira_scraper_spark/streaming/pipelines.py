@@ -344,53 +344,35 @@ def streaming_dedup_ingest(
         sh_u, sig_u = sh_tier.union(), sig_tier.union()
         scratch: list = []
         parts: list = []
-        kept, _ = incremental_dedup(
-            batch_df,
-            (sh_u, sig_u) if sh_u is not None else None,
-            scratch_out=scratch,
-            kept_parts_out=parts,
-        )
-        # batch_id lives ONLY in the directory name: writing it as a data
-        # column too made every read of out_dir resolve a duplicate
-        # (COLUMN_ALREADY_EXISTS warning; partition schema happened to win
-        # — review r06). Partition discovery reconstitutes the column.
-        # `kept` feeds ONLY this write (the index advance derives from the
-        # batch shingle/signature checkpoints, not from kept), so no
-        # re-checkpoint before it — one fewer job per batch (r09 profile).
-        #
-        # r14 (guide §2.6, overlap independent jobs): the survivor write
-        # and the two O(batch) segment checkpoints are three independent
-        # jobs over already-materialized inputs (losers is an eager
-        # checkpoint; sh_new/sig_new land on first use) — run them on
-        # concurrent driver threads so the batch pays the slowest, not the
-        # sum. The REPLAY CONTRACT is untouched: checkpointing a segment
-        # is not a state advance — tier.add() below still runs only after
-        # the write's .result() proves the batch directory committed; on a
-        # write failure the orphan segment checkpoints are freed.
-        sh_kept, sig_kept = parts
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_w = pool.submit(
-                kept.write.mode("overwrite").parquet,
-                f"{out_dir}/batch_id={batch_id}",
+        try:
+            kept, _ = incremental_dedup(
+                batch_df,
+                (sh_u, sig_u) if sh_u is not None else None,
+                scratch_out=scratch,
+                kept_parts_out=parts,
             )
-            f_sh = pool.submit(sh_kept.localCheckpoint, True)
-            f_sig = pool.submit(sig_kept.localCheckpoint, True)
-            sh_ck = f_sh.result()
-            sig_ck = f_sig.result()
-            try:
-                f_w.result()
-            except BaseException:
-                _free_local_checkpoint(sh_ck)
-                _free_local_checkpoint(sig_ck)
-                raise
-        # O(batch) state advance: only this batch's kept index segment;
-        # tier merges amortize the rest (r09)
-        sh_tier.add(sh_ck, batch_id)
-        sig_tier.add(sig_ck, batch_id)
-        for df in scratch:  # incremental_dedup's internal checkpoints —
-            _free_local_checkpoint(df)  # superseded once the segments landed
+            # batch_id lives ONLY in the directory name: writing it as a
+            # data column too made every read of out_dir resolve a
+            # duplicate (COLUMN_ALREADY_EXISTS warning; partition schema
+            # happened to win — review r06). Partition discovery
+            # reconstitutes the column. `kept` feeds ONLY this write (the
+            # index advance derives from the batch shingle/signature
+            # checkpoints, not from kept), so no re-checkpoint before it —
+            # one fewer job per batch (r09 profile). The segments' inputs
+            # are already materialized (losers is an eager checkpoint;
+            # sh_new/sig_new land on first use).
+            sh_ck, sig_ck = _write_and_checkpoint(
+                kept, f"{out_dir}/batch_id={batch_id}", *parts
+            )
+            # O(batch) state advance: only this batch's kept index
+            # segment; tier merges amortize the rest (r09)
+            sh_tier.add(sh_ck, batch_id)
+            sig_tier.add(sig_ck, batch_id)
+        finally:
+            # incremental_dedup's internal checkpoints: superseded once
+            # the segments landed, orphaned if the batch failed
+            for df in scratch:
+                _free_local_checkpoint(df)
 
     return (
         doc_stream.writeStream.foreachBatch(sink)
@@ -398,6 +380,32 @@ def streaming_dedup_ingest(
         .trigger(availableNow=True)
         .start()
     )
+
+
+def _write_and_checkpoint(kept: DataFrame, path: str, *segments: DataFrame):
+    """An ingest sink's independent per-batch jobs: the survivor write to
+    ``path`` and one eager checkpoint per O(batch) state segment (r14,
+    guide §2.6: concurrent driver threads, so the batch pays the slowest
+    job, not the sum). Returns the segment checkpoints.
+
+    REPLAY CONTRACT: checkpointing a segment is not a state advance — the
+    caller adds the segments to its tiers only after this returns, i.e.
+    after the write committed. If ANY job fails, every segment checkpoint
+    that did materialize is freed and the first failure (the write's
+    first) is raised; the pool has joined every job by then, so no
+    outcome goes unread (ADVICE r14 #2)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=1 + len(segments)) as pool:
+        f_w = pool.submit(kept.write.mode("overwrite").parquet, path)
+        f_segs = [pool.submit(s.localCheckpoint, True) for s in segments]
+    failures = [f.exception() for f in (f_w, *f_segs) if f.exception()]
+    if failures:
+        for f in f_segs:
+            if f.exception() is None:
+                _free_local_checkpoint(f.result())
+        raise failures[0]
+    return [f.result() for f in f_segs]
 
 
 def _committed_batches(spark, out_dir: str) -> list[tuple[str, int]]:
@@ -910,66 +918,55 @@ def streaming_media_dedup_ingest(
             # id-replay guard: re-delivered docs (including undecodable /
             # degenerate ones the perceptual path cannot see) drop here
             batch_df = batch_df.join(ids_union, "doc_id", "left_anti")
-        batch_df = batch_df.localCheckpoint(eager=True)
-        ph = hasher(batch_df)
-        if "frame_idx" not in ph.columns:
-            ph = ph.withColumn("frame_idx", F.lit(0))
-        # the hash table feeds three consumers (within-batch self-join
-        # sides + the index join + the kept-segment advance): decode once
-        ph = ph.localCheckpoint(eager=True)
-        # left_anti is duplicate-insensitive: no distinct needed on drops
-        drops = _pair_drops(
-            _phash_verified_pairs(ph, max_hamming, max_block_freq),
-            "doc_a",
-            "doc_b",
-        )
-        index_ph = seg_tier.union()
-        if index_ph is not None:
-            drops = drops.unionByName(
-                _pair_drops(
-                    media_near_dup_against_index(
-                        ph, index_ph, max_hamming, max_block_freq
-                    ),
-                    "index_doc",
-                    "new_doc",
+        # per-batch intermediates (batch, hash table, survivors): freed
+        # once every eager derivative (write, ids segment, hash segment)
+        # has materialized, or when the batch fails
+        scratch: list = []
+        try:
+            batch_df = batch_df.localCheckpoint(eager=True)
+            scratch.append(batch_df)
+            ph = hasher(batch_df)
+            if "frame_idx" not in ph.columns:
+                ph = ph.withColumn("frame_idx", F.lit(0))
+            # the hash table feeds three consumers (within-batch self-join
+            # sides + the index join + the kept-segment advance): decode
+            # once
+            ph = ph.localCheckpoint(eager=True)
+            scratch.append(ph)
+            # left_anti is duplicate-insensitive: no distinct needed on drops
+            drops = _pair_drops(
+                _phash_verified_pairs(ph, max_hamming, max_block_freq),
+                "doc_a",
+                "doc_b",
+            )
+            index_ph = seg_tier.union()
+            if index_ph is not None:
+                drops = drops.unionByName(
+                    _pair_drops(
+                        media_near_dup_against_index(
+                            ph, index_ph, max_hamming, max_block_freq
+                        ),
+                        "index_doc",
+                        "new_doc",
+                    )
                 )
+            kept = batch_df.join(drops, "doc_id", "left_anti").localCheckpoint(
+                eager=True
             )
-        kept = batch_df.join(drops, "doc_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        # r14 (guide §2.6): the survivor write and the two O(batch) state
-        # segments are independent jobs over the materialized `kept`/`ph`
-        # checkpoints — overlap them on driver threads; tier adds still
-        # gate on the write's .result() (state advances only after the
-        # batch directory committed), orphans freed on write failure.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_w = pool.submit(
-                kept.write.mode("overwrite").parquet,
+            scratch.append(kept)
+            ids_ck, seg_ck = _write_and_checkpoint(
+                kept,
                 f"{out_dir}/batch_id={batch_id}",
+                kept.select("doc_id"),
+                ph.join(kept.select("doc_id"), "doc_id", "left_semi"),
             )
-            f_ids = pool.submit(kept.select("doc_id").localCheckpoint, True)
-            f_seg = pool.submit(
-                ph.join(kept.select("doc_id"), "doc_id", "left_semi").localCheckpoint,
-                True,
-            )
-            ids_ck = f_ids.result()
-            seg_ck = f_seg.result()
-            try:
-                f_w.result()
-            except BaseException:
-                _free_local_checkpoint(ids_ck)
-                _free_local_checkpoint(seg_ck)
-                raise
-        # state advances are O(batch) on BOTH tables; tier merges amortize
-        ids_tier.add(ids_ck, batch_id)
-        seg_tier.add(seg_ck, batch_id)
-        # per-batch intermediates: every eager derivative (write, ids
-        # segment, hash segment) has materialized — free deterministically
-        _free_local_checkpoint(ph)
-        _free_local_checkpoint(kept)
-        _free_local_checkpoint(batch_df)
+            # state advances are O(batch) on BOTH tables; tier merges
+            # amortize
+            ids_tier.add(ids_ck, batch_id)
+            seg_tier.add(seg_ck, batch_id)
+        finally:
+            for df in scratch:
+                _free_local_checkpoint(df)
 
     return (
         media_stream.writeStream.foreachBatch(sink)

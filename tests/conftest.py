@@ -21,3 +21,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return TEST_SF_DIR
+
+
+@pytest.fixture
+def session_store(monkeypatch):
+    """An empty io session store for one test: the module's store and
+    build-lock map are swapped for fresh dicts and restored afterwards,
+    so the test can build, inspect and drain entries without touching the
+    session's shared silver tables."""
+    from apache_jira_scraper_spark import io
+
+    store: dict = {}
+    monkeypatch.setattr(io, "_STORE", store)
+    monkeypatch.setattr(io, "_BUILD_LOCKS", {})
+    return store
+
+
+def store_entries(store: dict, name: str) -> dict:
+    """The store's entries under one name, keyed (app, name, *key)."""
+    return {k: v for k, v in store.items() if k[1] == name}

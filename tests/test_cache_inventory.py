@@ -1,18 +1,19 @@
-"""Session-cache inventory (VERDICT r10 item 3): ONE listing test that
-enumerates every module-level dict in the package and asserts each one is
-either (a) a session cache whose ONLY mutation path is io.session_cached —
-keyed (applicationId, *extra), dead-app-evicted, RLock-serialized, all
-properties pinned functionally in tests/test_io_cache.py — or (b) an
-explicitly exempted non-cache (the query registry). Today every cache is
-individually disciplined; this test is what stops the NEXT one from
-leaking: adding a module-level dict that is mutated directly (cache[k]=v,
-.setdefault, .update) fails here, as does adding a cache without updating
-the inventory below.
+"""Session-store inventory (VERDICT r10 item 3, ROADMAP item 2): the
+package keeps every piece of session state in ONE container, io.py's
+store, written only through io.session_cached / io.session_replace under
+a string-literal name. This test is what stops the next cache from
+growing its own mechanism:
 
-Static (AST) rather than runtime: monkeypatching session_cached and
-triggering every builder would cost minutes of Spark time per run and
-still only cover the caches a test happens to touch; the discipline being
-asserted — "no write-site outside session_cached" — is a source property.
+- no module-level dict outside the EXEMPT constants, the registry and
+  the store itself;
+- every store name is a string literal, used at one call site, and the
+  set of names equals EXPECTED_NAMES;
+- no RESULT_GRAIN_BANNED name, and no store name derived from one.
+
+Static (AST) rather than runtime: triggering every builder would cost
+minutes of Spark time per run and still only cover the entries a test
+happens to touch; "one container, named entries" is a source property.
+The store's behavior is pinned functionally in tests/test_io_cache.py.
 """
 
 from __future__ import annotations
@@ -22,88 +23,42 @@ from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "apache_jira_scraper_spark"
 
-# The full session-cache inventory. A new cache dict must be added here
-# (and be session_cached-disciplined) or this test fails on discovery.
-EXPECTED_CACHES = {
-    "operators/corpus.py": {
-        "_DOCS_PROJ_CACHE",
-        "_DOMAIN_CARDS_CACHE",
-        # r13 optimization round: corpus_report's per-doc
-        # (source, lang, band, n_tokens) projection (W16)
-        "_REPORT_BASE_CACHE",
-    },
-    "operators/dedup.py": {
-        "_SHINGLE_CACHE",
-        "_PAIRS_CACHE",
-        "_SIMHASH_CACHE",
-        "_EMB_PROJ_CACHE",
-        "_EMB_PAIRS_CACHE",
-        "_LABELS_CACHE",
-        "_SEM_IVF_CACHE",
-        "_SEM_LSH_CACHE",
-        "_SEM_PROTO_CACHE",
-        "_SUBSTR_LEG_CACHE",
-        "_NGRAM_LEG_CACHE",
-    },
-    "operators/multimodal.py": {
-        "_PHASH_TABLES",
-        "_PHASH_PAIRS",
-        "_MEDIA_CLUSTERS",
-        # r13 optimization round: the 11 fixture folds merged into one
-        # session-checkpointed side table (W9)
-        "_FIXTURE_CORE",
-    },
-    "operators/pipeline_queries.py": {
-        "_ISSUES_CACHE",
-        # r14: prepared-query memo — the lazy 7-branch example-union frame
-        # OBJECT per (sf_dir, include_content); no data materialized (the
-        # r13 _EXAMPLES_CACHE eager checkpoint held the flatmap gate's
-        # ANSWER and is banned; this holds only the analyzed plan — every
-        # consumer action re-executes the explode from the issues silver)
-        "_EXAMPLES_FRAME_MEMO",
-    },
-    "operators/quantize.py": {"_PQ_MODEL", "_OPQ_MODEL", "_TS_SPINE"},
-    "operators/similarity.py": {
-        "_EXACT_TOPK_CACHE",
-        "_IVF_CENTROIDS",
-    },
-    "operators/text.py": {
-        "_BM25_TOPK_CACHE",
-        "_BIGRAM_LEG_CACHE",
-        "_DOCS_TOK_CACHE",
-        "_CONTAM_LEG_CACHE",
-        "_BACKOFF_LEG_CACHE",
-        "_BPE_PIECES_CACHE",
-        "_UNIGRAM_LEG_CACHE",
-        "_QC_WEIGHTS_CACHE",
-        "_BPE_LEG_CACHE",
-        "_DSIR_LEG_CACHE",
-        "_TOKPACK_LEG_CACHE",
-        "_PPL_LEG_CACHE",
-        "_VERDICT_LEG_CACHE",
-        "_UNITOK_LEG_CACHE",
-        # r13 optimization round: prepared-query memo — holds the
-        # lazily-assembled 19-leg union DataFrame OBJECT (no data beyond
-        # the inventoried leg checkpoints); execution still runs per call
-        "_TEXT_GATE_FRAME_MEMO",
-    },
-    "operators/extended.py": {
-        "_CMS_HH_CACHE",
-        # r14: prepared-query memo — holds jira_rest_ingest's lazily-built
-        # frame OBJECT (no data materialized; page fetches + extraction
-        # re-execute per call, only the ~1 s/call from_json+extract plan
-        # construction amortizes; presentation sort live per call)
-        "_REST_FRAME_MEMO",
-    },
+# Every store name, by kind. A new entry must be added here.
+# Input-side silver tables: eager checkpoints of shared inputs/indexes.
+SILVER_TABLES = {
+    "corpus.docs_proj", "corpus.domain_cards", "corpus.report_base",
+    "dedup.shingles", "dedup.pairs", "dedup.simhash", "dedup.emb_proj",
+    "dedup.emb_pairs", "dedup.labels", "dedup.sem_ivf", "dedup.sem_lsh",
+    "dedup.sem_proto", "dedup.substr_leg", "dedup.ngram_leg",
+    "multimodal.phash_tables", "multimodal.phash_pairs",
+    "multimodal.media_clusters", "multimodal.fixture_core", "pipeline.issues",
+    "quantize.ts_spine", "similarity.exact_topk", "text.bm25_topk",
+    "text.bigram_leg", "text.docs_tok", "text.contam_leg", "text.backoff_leg",
+    "text.bpe_pieces", "text.unigram_leg", "text.bpe_leg", "text.dsir_leg",
+    "text.tokpack_leg", "text.ppl_leg", "text.verdict_leg", "text.unitok_leg",
+    "extended.cms_hh",
 }
+# Trained model objects (codebooks, rotations, centroids, weights).
+MODELS = {
+    "quantize.pq_model", "quantize.opq_model", "similarity.ivf_centroids",
+    "text.qc_weights",
+}
+# Prepared-query frame memos: a lazy DataFrame OBJECT, no data; every
+# call still optimizes and executes it (r13/r14).
+FRAME_MEMOS = {"pipeline.examples_frame", "text.gate_frame", "extended.rest_frame"}
+# Per-call checkpoints (io.session_replace), held only until the next
+# call frees them and never read back (ADVICE r14 #1).
+PER_CALL = {"dedup.cluster_loops"}
+EXPECTED_NAMES = SILVER_TABLES | MODELS | FRAME_MEMOS | PER_CALL
 
 # r14 (VERDICT r13 item 1): caches whose entry held a GATE'S RESULT GRAIN —
 # the query's answer (or the answer modulo its presentation sort) rather
 # than shared input-side state — were removed; warm bench samples on those
 # gates were timing checkpoint scans of the precomputed answer instead of
-# the declared query. These names must never reappear, and no NEW cache may
-# hold a frame that any registered gate returns (modulo a final orderBy/
-# column rename): a cache entry must be consumed by strictly MORE
+# the declared query. These names must never reappear, nor a store name
+# derived from one ("_FUZZY_PAIRS_CACHE" -> "<module>.fuzzy_pairs"), and
+# no NEW entry may hold a frame that any registered gate returns (modulo a
+# final orderBy/column rename): an entry must be consumed by strictly MORE
 # computation than a presentation sort before it reaches a gate's output.
 RESULT_GRAIN_BANNED = {
     "_FUZZY_PAIRS_CACHE",   # relational: the fuzzy gate's verified pairs
@@ -113,16 +68,13 @@ RESULT_GRAIN_BANNED = {
     "_EXAMPLES_CACHE",      # pipeline_queries: jira_flatmap_examples' answer
 }
 
-# Module-level dicts that are NOT session caches (never hold DataFrames
-# keyed by applicationId). Each exemption must say why.
+# The only module-level dicts the package may define. Each says why.
 EXEMPT = {
     # the query-name -> Entry registry: process-lifetime by design,
     # mutated only by registry.register() at import time
     "registry.py": {"_REGISTRY"},
-    # r13: the per-(cache, key) build-lock map behind session_cached —
-    # holds threading.RLocks, never DataFrames; maintained (insert +
-    # dead-app eviction) inside session_cached itself
-    "io.py": {"_BUILD_LOCKS"},
+    # THE session store and its per-entry build-lock map (RLocks only)
+    "io.py": {"_STORE", "_BUILD_LOCKS"},
     # immutable constant: per-source mix weights for the corpus gate
     "operators/corpus.py": {"GATE_MIX_WEIGHTS"},
     # _MOCK holds the in-process MockJira server singleton (plain Python
@@ -135,14 +87,19 @@ EXEMPT = {
     "operators/pipeline_queries.py": {"ORACLES"},
 }
 
+STORE_WRITERS = {"session_cached", "session_replace"}
+
+
+def _sources():
+    for py in sorted(PKG.rglob("*.py")):
+        yield str(py.relative_to(PKG)), py.read_text()
+
 
 def _module_level_dicts(tree: ast.Module) -> set[str]:
     names: set[str] = set()
     for node in tree.body:
         if isinstance(node, ast.Assign) and isinstance(node.value, ast.Dict):
-            for t in node.targets:
-                if isinstance(t, ast.Name):
-                    names.add(t.id)
+            names |= {t.id for t in node.targets if isinstance(t, ast.Name)}
         elif (
             isinstance(node, ast.AnnAssign)
             and isinstance(node.value, ast.Dict)
@@ -152,115 +109,78 @@ def _module_level_dicts(tree: ast.Module) -> set[str]:
     return names
 
 
-def _is_session_cached_call(node: ast.Call) -> bool:
-    f = node.func
-    return (isinstance(f, ast.Name) and f.id == "session_cached") or (
-        isinstance(f, ast.Attribute) and f.attr == "session_cached"
+def _store_calls(tree: ast.Module):
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            fname = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if fname in STORE_WRITERS:
+                yield node
+
+
+def _stem(banned: str) -> str:
+    return banned.strip("_").lower().removesuffix("_cache")
+
+
+def test_no_module_level_dict_outside_the_store():
+    found = {}
+    for rel, src in _sources():
+        dicts = _module_level_dicts(ast.parse(src))
+        if dicts:
+            found[rel] = dicts
+    assert found == EXEMPT, (
+        "module-level dicts drifted — session state belongs in io.py's "
+        f"store (io.session_cached), constants need an EXEMPT entry: {found}"
     )
 
 
-_MUTATORS = {"setdefault", "update", "pop", "popitem", "clear", "__setitem__"}
-
-
-def _violations(tree: ast.Module, caches: set[str]) -> list[str]:
-    """Every use of a cache name other than its definition must be as the
-    first argument of a session_cached(...) call. Direct subscript stores,
-    deletes, and mutating method calls are violations; so is ANY other
-    read (passing the dict somewhere else is how an undisciplined write
-    path starts).
-
-    ONE structural exemption (ADVICE r13): a module may define a
-    `drain_session_caches()` function that frees + clears its OWN caches
-    — the centralized drain site that keeps the text gate's frame memo
-    clearing coupled to its leg caches. Everything lexically inside that
-    one function is exempt; a drain helper under any other name still
-    fails here."""
-    bad: list[str] = []
-    allowed_use: set[int] = set()  # id() of Name nodes used legitimately
-    drain_nodes: set[int] = set()  # id() of every node inside the drain fn
-    for node in ast.walk(tree):
-        if isinstance(node, ast.FunctionDef) and node.name == "drain_session_caches":
-            for sub in ast.walk(node):
-                drain_nodes.add(id(sub))
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Call) and _is_session_cached_call(node):
-            if node.args and isinstance(node.args[0], ast.Name):
-                allowed_use.add(id(node.args[0]))
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Name) and node.id in caches:
-            if isinstance(node.ctx, (ast.Store,)):
-                continue  # the module-level definition itself
-            if id(node) not in allowed_use and id(node) not in drain_nodes:
-                bad.append(f"{node.id} used outside session_cached at line {node.lineno}")
-    for node in ast.walk(tree):
-        if id(node) in drain_nodes:
-            continue
-        if isinstance(node, ast.Subscript) and isinstance(node.value, ast.Name):
-            if node.value.id in caches and isinstance(
-                node.ctx, (ast.Store, ast.Del)
-            ):
-                bad.append(
-                    f"{node.value.id} subscript-mutated at line {node.lineno}"
-                )
-        if (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and isinstance(node.func.value, ast.Name)
-            and node.func.value.id in caches
-            and node.func.attr in _MUTATORS
-        ):
-            bad.append(
-                f"{node.func.value.id}.{node.func.attr}() at line {node.lineno}"
-            )
-    return bad
-
-
-def test_every_module_level_dict_is_inventoried_and_disciplined():
-    found: dict[str, set[str]] = {}
+def test_store_names_are_literals_and_inventoried():
+    names: list[str] = []
     problems: list[str] = []
-    for py in sorted(PKG.rglob("*.py")):
-        rel = str(py.relative_to(PKG))
-        tree = ast.parse(py.read_text())
-        dicts = _module_level_dicts(tree)
-        if not dicts:
-            continue
-        exempt = EXEMPT.get(rel, set())
-        caches = dicts - exempt
-        if caches:
-            found[rel] = caches
-            problems += [f"{rel}: {v}" for v in _violations(tree, caches)]
-    assert found == EXPECTED_CACHES, (
-        "module-level dict inventory drifted — new session caches must be "
-        f"added to EXPECTED_CACHES (and use io.session_cached): {found}"
+    for rel, src in _sources():
+        if rel == "io.py":
+            continue  # the definitions themselves
+        for call in _store_calls(ast.parse(src)):
+            arg = call.args[0] if call.args else None
+            if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+                names.append(arg.value)
+            else:
+                problems.append(f"{rel}:{call.lineno} store name is not a literal")
+    assert not problems, "\n".join(problems)
+    dup = sorted({n for n in names if names.count(n) > 1})
+    assert not dup, f"store names used at more than one call site: {dup}"
+    assert set(names) == EXPECTED_NAMES, (
+        "store name inventory drifted — add new names to EXPECTED_NAMES: "
+        f"missing={sorted(EXPECTED_NAMES - set(names))} "
+        f"new={sorted(set(names) - EXPECTED_NAMES)}"
     )
-    assert not problems, "undisciplined cache access:\n" + "\n".join(problems)
 
 
 def test_no_result_grain_caches():
-    """VERDICT r13 item 1: the five result-grain caches stay removed, and
-    the inventory cannot quietly re-admit them. Source-level like the
-    discipline test above: any reappearance of a banned name anywhere in
-    the package (or in EXPECTED_CACHES) fails loudly with the file."""
-    hits: list[str] = []
-    for py in sorted(PKG.rglob("*.py")):
-        src = py.read_text()
-        for name in RESULT_GRAIN_BANNED:
-            if name in src:
-                hits.append(f"{py.relative_to(PKG)}: {name}")
+    """VERDICT r13 item 1: the five result-grain caches stay removed, as
+    dicts or as store entries."""
+    hits = [
+        f"{rel}: {name}"
+        for rel, src in _sources()
+        for name in RESULT_GRAIN_BANNED
+        if name in src
+    ]
     assert not hits, (
         "result-grain cache name reintroduced (these memoized a gate's "
         "answer; see RESULT_GRAIN_BANNED):\n" + "\n".join(hits)
     )
-    inventoried = {n for names in EXPECTED_CACHES.values() for n in names}
-    assert not (inventoried & RESULT_GRAIN_BANNED)
+    banned_stems = {_stem(n) for n in RESULT_GRAIN_BANNED}
+    derived = {n for n in EXPECTED_NAMES if n.split(".", 1)[1] in banned_stems}
+    assert not derived, f"store names derived from banned caches: {derived}"
 
 
-def test_session_cached_is_the_only_cache_writer_in_io():
-    """io.session_cached's own body is the one legitimate write site; pin
-    that it actually keys by applicationId and evicts dead apps (source
-    guard — the functional twin lives in tests/test_io_cache.py)."""
+def test_store_is_private_to_io():
+    """io.py's store is keyed by applicationId, evicts through one helper,
+    and no other module touches it except through the io functions."""
     src = (PKG / "io.py").read_text()
-    assert "applicationId" in src
-    body = src.split("def session_cached", 1)[1]
-    assert "del cache[k]" in body  # dead-app eviction
-    assert "_SESSION_CACHE_LOCK" in body  # serialized builds
+    body = src.split("def session_cached", 1)[1].split("\ndef ", 1)[0]
+    assert "applicationId" in body
+    assert "_evict(" in body  # dead-app eviction
+    assert "_SESSION_CACHE_LOCK" in body  # serialized store access
+    leaks = [rel for rel, s in _sources() if rel != "io.py" and "_STORE" in s]
+    assert not leaks, f"modules reaching into io._STORE: {leaks}"

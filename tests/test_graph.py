@@ -350,3 +350,27 @@ def test_cluster_gate_weighted_keeper_contract(spark, sf_dir):
     assert any(
         r["pagerank_w_ppb"] != r["pagerank_ppb"] for r in out
     ), "weighted ranks identical to unweighted everywhere — weights vacuous"
+
+
+def test_dedup_clusters_repeated_calls_pin_one_calls_checkpoints(spark, sf_dir):
+    """ADVICE r14 #1: each q_dedup_clusters call leaves three converged
+    checkpoints (labels, pagerank, weighted pagerank) behind its lazy
+    result. Three calls — results all still referenced, so nothing is left
+    to GC — must leave at most one call's worth live: each call frees the
+    previous call's set."""
+    from apache_jira_scraper_spark.operators.dedup import (
+        minhash_pairs,
+        q_dedup_clusters,
+    )
+
+    def n_persistent():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    minhash_pairs(spark, sf_dir)  # the session entries the gate reads
+    q_dedup_clusters(spark, sf_dir).collect()  # frees any earlier call's set
+    base = n_persistent()
+    results = []
+    for _ in range(3):
+        results.append(q_dedup_clusters(spark, sf_dir))
+        assert results[-1].collect()
+    assert n_persistent() - base <= 0, "dedup_clusters checkpoints accumulate"

@@ -4499,59 +4499,50 @@ def test_media_tail_gate_fixture_premises(spark, sf_dir):
     assert checked
 
 
-def test_multimodal_clusters_leg_builds_once_per_session(spark, sf_dir):
+def test_multimodal_clusters_leg_builds_once_per_session(spark, sf_dir, session_store):
     """Review r09: the gate's clusters leg is session-cached — building
     the gate twice must run the eager connected-components build ONCE
     (second construction reuses the same checkpointed frame), keeping
     plan-inspection sweeps and bench re-samples from re-paying the
     iterative compute, and the cached frame must still be alive
     (consumable) after the build's scratch frees."""
-    from apache_jira_scraper_spark.io import free_local_checkpoint
+    from apache_jira_scraper_spark.io import drain_session
     from apache_jira_scraper_spark.operators import multimodal as M
+    from tests.conftest import store_entries
 
-    def _drain(cache):
-        # dropping the only reference without freeing would strand the
-        # eager checkpoint blocks until GC — the leak io.py documents
-        for v in cache.values():
-            for df in v if isinstance(v, tuple) else (v,):
-                free_local_checkpoint(df)
-        cache.clear()
+    def named(name):
+        return store_entries(session_store, name)
 
     # r13 optimization round (W9): the gate now consumes the merged
     # fixture core; the inner folds build once INSIDE the core build, so
-    # the core cache must be drained too for a clean rebuild — and the
-    # session-once/alive-after-frees contract is asserted on the core AND
-    # the inner iterative caches it populates.
-    _drain(M._FIXTURE_CORE)
-    _drain(M._PHASH_PAIRS)
-    _drain(M._MEDIA_CLUSTERS)
-    _drain(M._PHASH_TABLES)
+    # the build starts from an empty store (session_store) for a clean
+    # rebuild — and the session-once/alive-after-frees contract is
+    # asserted on the core AND the inner iterative entries it populates.
     try:
         M.q_multimodal_decode(spark, sf_dir)
-        assert len(M._FIXTURE_CORE) == 1
-        assert len(M._MEDIA_CLUSTERS) == 1
-        assert len(M._PHASH_TABLES) == 1
-        (key, core) = next(iter(M._FIXTURE_CORE.items()))
+        assert len(named("multimodal.fixture_core")) == 1
+        assert len(named("multimodal.media_clusters")) == 1
+        assert len(named("multimodal.phash_tables")) == 1
+        (key, core) = next(iter(named("multimodal.fixture_core").items()))
         assert key[0] == spark.sparkContext.applicationId and sf_dir in key
-        (ckey, cached) = next(iter(M._MEDIA_CLUSTERS.items()))
-        tables = next(iter(M._PHASH_TABLES.values()))
+        (ckey, cached) = next(iter(named("multimodal.media_clusters").items()))
+        tables = next(iter(named("multimodal.phash_tables").values()))
         assert len(tables) == 3
         n_rows = core.count()  # alive: scratch frees spared the result
         M.q_multimodal_decode(spark, sf_dir)
-        assert len(M._FIXTURE_CORE) == 1
-        assert M._FIXTURE_CORE[key] is core, "fixture core rebuilt"
-        assert M._MEDIA_CLUSTERS[ckey] is cached, "clusters leg rebuilt"
+        assert len(named("multimodal.fixture_core")) == 1
+        assert named("multimodal.fixture_core")[key] is core, "fixture core rebuilt"
+        assert named("multimodal.media_clusters")[ckey] is cached, "clusters leg rebuilt"
         # the hash tables — the decode's dominant cost — must be the SAME
         # checkpointed frames, not a rebuilt tuple (review r09)
-        assert next(iter(M._PHASH_TABLES.values())) is tables, "phash rebuilt"
+        assert next(iter(named("multimodal.phash_tables").values())) is tables, "phash rebuilt"
         assert all(t.count() > 0 for t in tables)
         assert cached.count() > 0  # clusters frame alive too
         assert core.count() == n_rows
     finally:
-        _drain(M._FIXTURE_CORE)
-        _drain(M._PHASH_PAIRS)
-        _drain(M._MEDIA_CLUSTERS)
-        _drain(M._PHASH_TABLES)
+        # dropping the only reference without freeing would strand the
+        # eager checkpoint blocks until GC — the leak io.py documents
+        drain_session()
 
 
 def test_cross_modal_image_matches_video_frame(spark):

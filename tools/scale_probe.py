@@ -45,9 +45,9 @@ ratio/plan-shape criteria:
 
 Session-cache discipline: dedup_near_pairs and bm25_topk build
 session-cached silver tables (pair table, shingle index, bm25 top-k,
-exact cosine top-k) keyed (app, sf_dir) — every timed sample clears and
-frees those caches first, so both scales pay the FULL cold pipeline
-instead of a warm checkpoint scan.
+exact cosine top-k) keyed (app, name, sf_dir) — every timed sample
+drains the whole session store first (io.drain_session), so both scales
+pay the FULL cold pipeline instead of a warm checkpoint scan.
 """
 
 from __future__ import annotations
@@ -235,37 +235,6 @@ def build_exploded_docs(sf_dir: str, out_base: str, factor: int = 10) -> dict[st
     return dirs
 
 
-def _clear_text_session_caches() -> None:
-    """Free + clear every session cache the probed text gates build, so a
-    timed sample pays the full cold pipeline. The text module's caches —
-    INCLUDING the prepared-query frame memo, whose lazy plan references
-    the leg checkpoints freed here — are drained by the module's own
-    centralized helper (ADVICE r13: the memo-must-drain-with-the-legs
-    invariant is structural there, not a list each drain site maintains);
-    only the non-text caches the probed gates touch are enumerated
-    here."""
-    from apache_jira_scraper_spark.io import free_local_checkpoint
-    from apache_jira_scraper_spark.operators import dedup, similarity, text
-
-    text.drain_session_caches()
-    for cache in (
-        dedup._SHINGLE_CACHE,
-        dedup._PAIRS_CACHE,
-        # r12: the substr leg rode a new session cache — same clear-list
-        # rule as the r11 bigram lesson (a cache added in the same change
-        # set as this probe missed the clear list and the probe's "cold"
-        # samples silently reused the warm checkpoint)
-        dedup._SUBSTR_LEG_CACHE,
-        dedup._NGRAM_LEG_CACHE,
-        similarity._EXACT_TOPK_CACHE,
-    ):
-        for v in list(cache.values()):
-            for x in v if isinstance(v, tuple) else (v,):
-                if hasattr(x, "unpersist"):
-                    free_local_checkpoint(x)
-        cache.clear()
-
-
 def main_text() -> int:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     out_base = sys.argv[3] if len(sys.argv) > 3 else "/tmp/scale10"
@@ -281,6 +250,7 @@ def main_text() -> int:
     from pyspark.sql import SparkSession
 
     from apache_jira_scraper_spark import registry
+    from apache_jira_scraper_spark.io import drain_session
 
     spark = (
         SparkSession.builder.master(
@@ -305,7 +275,7 @@ def main_text() -> int:
         dir10 = dirs[tag]
 
         def cold(d):
-            _clear_text_session_caches()
+            drain_session()
             t0 = time.time()
             fn(spark, d).collect()
             return time.time() - t0
@@ -313,10 +283,10 @@ def main_text() -> int:
         # untimed warmup at both scales (plan compile + JIT off the clock)
         cold(sf_dir), cold(dir10)
         t1 = min(cold(sf_dir) for _ in range(samples))
-        _clear_text_session_caches()
+        drain_session()
         s1 = plan_shape(fn(spark, sf_dir))
         t10 = min(cold(dir10) for _ in range(samples))
-        _clear_text_session_caches()
+        drain_session()
         s10 = plan_shape(fn(spark, dir10))
         ratio = t10 / t1 if t1 > 0 else float("inf")
 
